@@ -43,6 +43,11 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch size for the image-bearing stages: pages are ~tens of KB
 # compressed, keep batches modest so executor memory stays bounded.
 ARROW_MAX_RECORDS = 1024
+# Fused-kernel crop budget: once a whole turn has been processed and the
+# buffered word crops reach this many, the kernel recognizes and builds
+# what it holds, yields those rows and carries on. It bounds a task's
+# crop memory independently of how many turns an Arrow batch carries.
+CROP_BUDGET = 256
 
 # --- table structure ---------------------------------------------------------
 RULING_INK = 60  # ruling-line intensity: below BIN_THRESH*255 so the word

@@ -38,6 +38,9 @@ def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     exchange (guide §2.4: repartition(k) + groupBy(k) share one shuffle)
     and the per-key compute runs parallel with ZERO additional exchanges.
     Without keys, a round-robin spread (right for map-only consumers).
+    Databricks Runtime accepts ``spark.sql.shuffle.partitions=auto``
+    (open-source Spark rejects any non-int value); such a value falls
+    back to ``defaultParallelism``.
 
     Results are unaffected: every consumer is a projection, aggregation
     or join, none of which depend on row placement."""
@@ -46,7 +49,10 @@ def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     if df.rdd.getNumPartitions() >= p:
         return df
     if keys:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        try:
+            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except ValueError:
+            n = p
         return df.repartition(n, *keys)
     return df.repartition(p)
 

@@ -18,6 +18,7 @@ from ..kernels.exporters import EXPORTERS, PAGE_BREAKS
 from ..kernels.kie import kie_build_page, render_kie_page
 from .decode import decode_pages
 from .detect import detect_and_crop
+from .pipeline import crop_chunks, fused_source
 from .recognize import recognize
 
 KIE_PAGE_SCHEMA = (
@@ -59,15 +60,12 @@ def _kie_builder(pdf: pd.DataFrame) -> pd.DataFrame:
 def _make_fused_kie():
     """The KIE pipeline's fused kernel (round-7): decode -> detect ->
     recognize -> KIE-build inside one mapInPandas, exactly the
-    `operators.pipeline` fusion with the per-class builder swapped in.
+    `operators.pipeline` fusion with the per-class builder swapped in,
+    over the same crop-budgeted chunks (`pipeline.crop_chunks`).
     Output rows are per PAGE (the KIE contract) — everything is still a
     pure function of the turn's own input row, so no shuffle is needed
     after the de-skew repartition. Bit-identical to the staged path
     (shared kernels; parity-tested in tests/test_fused_pipeline.py)."""
-    import numpy as np
-
-    from ..fixtures.payloads import decode_payload
-    from ..kernels.detection import extract_crops
     from .detect import make_page_processor
     from .recognize import recognize_crop_arrays
 
@@ -76,37 +74,21 @@ def _make_fused_kie():
     def fn(batches):
         process_page = make_page_processor(None)
         for pdf in batches:
-            pages_meta, all_crops = [], []
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                try:
-                    pages = decode_payload(text)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    continue
-                for page_idx, img in enumerate(pages):
-                    img, _o, _oc, _rg, _tb, abs_boxes, rel_boxes, scores = process_page(img)
-                    crops = extract_crops(img, abs_boxes)
-                    start = len(all_crops)
-                    all_crops.extend(np.ascontiguousarray(c) for c in crops)
-                    pages_meta.append((
-                        conv_id, int(turn_idx), page_idx,
-                        (int(img.shape[0]), int(img.shape[1])),
-                        rel_boxes, scores, start, len(crops),
-                    ))
-            values, confs, _orients, _oconfs = recognize_crop_arrays(all_crops, True)
-            rows = []
-            for conv_id, turn_idx, page_idx, dims, rel, scores, start, n in pages_meta:
-                page = kie_build_page(
-                    rel, scores, values[start : start + n], confs[start : start + n],
-                    dims, page_idx=page_idx,
-                )
-                counts = {cls: len(preds) for cls, preds in page["predictions"].items()}
-                rows.append((
-                    conv_id, turn_idx, page_idx,
-                    render_kie_page(page), json.dumps(page["predictions"]), counts,
-                ))
-            yield pd.DataFrame(rows, columns=_COLS)
+            for turns, crops in crop_chunks(pdf, process_page):
+                values, confs, _orients, _oconfs = recognize_crop_arrays(crops, True)
+                rows = []
+                for conv_id, turn_idx, recs in turns:
+                    for page_idx, dims, _o, _oc, _rg, _tb, rel, scores, start, n in recs:
+                        page = kie_build_page(
+                            rel, scores, values[start : start + n], confs[start : start + n],
+                            dims, page_idx=page_idx,
+                        )
+                        counts = {cls: len(preds) for cls, preds in page["predictions"].items()}
+                        rows.append((
+                            conv_id, turn_idx, page_idx,
+                            render_kie_page(page), json.dumps(page["predictions"]), counts,
+                        ))
+                yield pd.DataFrame(rows, columns=_COLS)
 
     return fn
 
@@ -114,15 +96,9 @@ def _make_fused_kie():
 def kie_extract(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
     """KIE pipeline -> one row per page with per-class predictions (fused
     single-stage plan; see :func:`_make_fused_kie`)."""
-    from ..fixtures.payloads import PAYLOAD_MARK
-
-    if crop_partitions is None:
-        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 8
-    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-        "conv_id", "turn_idx", "text"
+    return fused_source(transcripts, crop_partitions).mapInPandas(
+        _make_fused_kie(), schema=KIE_PAGE_SCHEMA
     )
-    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-    return src.mapInPandas(_make_fused_kie(), schema=KIE_PAGE_SCHEMA)
 
 
 def kie_extract_staged(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:

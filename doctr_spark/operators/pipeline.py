@@ -8,12 +8,25 @@ shuffles after the de-skew repartition):
 
     scan transcripts
       -> filter contains('<doc:')  [pushed to scan] + project 3 cols
-      -> repartition xxhash64(conv_id, turn_idx)  [de-skews + fine-grains]
+      -> repartition xxhash64(conv_id, turn_idx)  [de-skews; 1 task/core]
       -> mapInPandas fused decode+detect+recognize+build+assemble
          (everything downstream of decode is a pure function of the turn's
           own row, so pages/crops/words never cross task boundaries and
           are never codec-encoded between stages)
       [-> optional left join back to all turns]
+
+The fused stage runs one Python task per core slot (`fused_source`):
+starting a Python task costs ~0.3-0.4 s of worker CPU on Python 3.11,
+mostly PySpark's worker calling `importlib.invalidate_caches()`, which
+makes the zipimporter re-read the ~1,300-entry `pyspark.zip` directory.
+A no-op mapInPandas on local[4] takes 3.5 s as 32 tasks and 0.6 s as 4,
+so the former 8 tasks per core spent more CPU starting tasks than
+running the kernel. At scale the start-ups amortize but 8 per core still
+loses: q2 at sf0.1 (11,683 payload turns) on local[4] took a median
+28.3 s at 1 task per core against 30.6 s at 8, and 32.6 s against 40.4 s
+with a CPU hog pinned to one core (BENCH.md). Coarser tasks hold more
+turns per Arrow batch; the kernel's crop budget (`config.CROP_BUDGET`)
+keeps their memory bounded.
 
 When ``loc_hooks`` are given, the pre-round-7 staged plan runs instead
 (hooks splice DataFrame transforms between detection and recognition):
@@ -34,6 +47,7 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
+from .. import config
 from .build import assemble_documents, build_pages
 from .decode import decode_pages
 from .detect import detect_and_crop
@@ -48,22 +62,90 @@ PAGE_ROW_SCHEMA = (
 )
 
 
+def fused_source(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
+    """Input of a fused stage: the payload-bearing turns' (conv_id,
+    turn_idx, text), hash-repartitioned on (conv_id, turn_idx) into
+    ``crop_partitions`` partitions — by default ``defaultParallelism``,
+    one Python task per core slot (see the module docstring for the
+    per-task cost). The hash spreads a long conversation's turns apart,
+    so this one repartition is the stage's only balancing point."""
+    from ..fixtures.payloads import PAYLOAD_MARK
+
+    if crop_partitions is None:
+        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism
+    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
+        "conv_id", "turn_idx", "text"
+    )
+    return src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
+
+
+def crop_chunks(pdf, process_page):
+    """Phase A of the fused kernels — decode + detect — over one Arrow
+    batch, cut into chunks bounded by ``config.CROP_BUDGET``.
+
+    Per turn: render the payload pages, run ``process_page`` and copy the
+    word crops out, so the page buffer is freed at once (crop area <<
+    page area). A turn whose payload fails to decode is skipped, as the
+    staged decode quarantines it. Whenever the held crops reach the
+    budget after a whole turn, and once at the end, yields
+    ``(turns, crops)``: each turn is ``(conv_id, turn_idx, recs)`` with
+    one record per page, ``(page_idx, (h, w), orient, orient_conf,
+    regions, tables, rel_boxes, scores, start, n)``, whose crops are
+    ``crops[start : start + n]``. Recognition is per crop, so the chunk
+    boundaries change no output row and no row order."""
+    import numpy as np
+
+    from ..fixtures.payloads import decode_payload
+    from ..kernels.detection import extract_crops
+
+    turns: list = []
+    crops: list = []
+    for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+        try:
+            pages = decode_payload(text)
+        except NotImplementedError:
+            raise  # disclosed env gates must fail loudly
+        except Exception:
+            continue  # quarantine the corrupt turn (same as staged decode)
+        recs = []
+        for page_idx, img in enumerate(pages):
+            img, orient, orient_conf, regions, tables, abs_boxes, rel_boxes, scores = (
+                process_page(img)
+            )
+            page_crops = extract_crops(img, abs_boxes)
+            recs.append((
+                page_idx,
+                (int(img.shape[0]), int(img.shape[1])),
+                orient, float(orient_conf),
+                regions, tables, rel_boxes, scores,
+                len(crops), len(page_crops),
+            ))
+            crops.extend(np.ascontiguousarray(c) for c in page_crops)
+        if recs:
+            turns.append((conv_id, int(turn_idx), recs))
+        if len(crops) >= config.CROP_BUDGET:
+            yield turns, crops
+            turns, crops = [], []
+    if turns:
+        yield turns, crops
+
+
 def _make_fused_extractor(
-    resolve_lines: bool,
-    resolve_blocks: bool,
-    paragraph_break: float,
-    detect_crop_orientation: bool,
-    keep_reading_order: bool,
-    mask_region_labels: tuple[str, ...] | None,
-    straighten_pages: bool,
-    reco_arch: str,
-    reco_vocab: str,
-    det_arch: str,
-    text_direction: str | None,
-    include_furniture: bool,
-    det_input_size: tuple[int, int] | None,
-    det_preserve_aspect_ratio: bool,
-    det_symmetric_pad: bool,
+    resolve_lines: bool = True,
+    resolve_blocks: bool = False,
+    paragraph_break: float = 0.035,
+    detect_crop_orientation: bool = True,
+    keep_reading_order: bool = False,
+    mask_region_labels: tuple[str, ...] | None = None,
+    straighten_pages: bool = False,
+    reco_arch: str = "ctc",
+    reco_vocab: str = "french",
+    det_arch: str = "db_like",
+    text_direction: str | None = None,
+    include_furniture: bool = True,
+    det_input_size: tuple[int, int] | None = None,
+    det_preserve_aspect_ratio: bool = True,
+    det_symmetric_pad: bool = True,
     emit: str = "docs",
 ):
     """The whole per-turn pipeline (decode -> detect -> recognize -> build
@@ -85,16 +167,14 @@ def _make_fused_extractor(
     (`detect.make_page_processor`, `recognize.recognize_crop_arrays`,
     `build.build_page_record`), so fused == staged bit-for-bit; the staged
     path remains for `loc_hooks` (which splice user DataFrame transforms
-    between detection and recognition).
+    between detection and recognition). Each Arrow batch is processed in
+    crop-budgeted chunks (:func:`crop_chunks`), one output frame per chunk.
     """
     import json
 
-    import numpy as np
     import pandas as pd
 
-    from ..fixtures.payloads import decode_payload
     from ..kernels.builder import PAGE_BREAK
-    from ..kernels.detection import extract_crops
     from .build import build_page_record
     from .detect import make_page_processor
     from .recognize import recognize_crop_arrays
@@ -108,87 +188,59 @@ def _make_fused_extractor(
             det_input_size, det_preserve_aspect_ratio, det_symmetric_pad,
         )
         for pdf in batches:
-            # phase A — decode + detect: per turn, render payload pages and
-            # run the page processor; word crops are copied out so the page
-            # buffer is freed immediately (crop area << page area)
-            turns: list = []  # (conv_id, turn_idx, [page records])
-            all_crops: list = []
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                try:
-                    pages = decode_payload(text)
-                except NotImplementedError:
-                    raise  # disclosed env gates must fail loudly
-                except Exception:
-                    continue  # quarantine the corrupt turn (same as staged decode)
-                recs = []
-                for page_idx, img in enumerate(pages):
-                    img, orient, orient_conf, regions, tables, abs_boxes, rel_boxes, scores = (
-                        process_page(img)
-                    )
-                    crops = extract_crops(img, abs_boxes)
-                    start = len(all_crops)
-                    all_crops.extend(np.ascontiguousarray(c) for c in crops)
-                    recs.append((
-                        page_idx,
-                        (int(img.shape[0]), int(img.shape[1])),
-                        orient, float(orient_conf),
-                        regions, tables, rel_boxes, scores,
-                        start, len(crops),
-                    ))
-                if recs:
-                    turns.append((conv_id, int(turn_idx), recs))
-            # phase B — recognition over every crop of the batch in one
-            # fixed-size batched forward (same batching as the staged stage)
-            values, confs, orients, oconfs = recognize_crop_arrays(
-                all_crops, detect_crop_orientation, reco_arch, reco_vocab
-            )
-            # phase C — per-page build + per-turn assembly
-            rows = []
-            for conv_id, turn_idx, recs in turns:
-                page_texts, page_jsons = [], []
-                n_words_total = 0
-                for (page_idx, dims, orient, orient_conf, regions, tables,
-                     rel_boxes, scores, start, n) in recs:  # fmt: skip
-                    # identical wire format to the staged aux JSON sideband
-                    raw_tables = json.loads(json.dumps(tables)) if tables else []
-                    layout_regions = (
-                        json.loads(json.dumps({
-                            "boxes": regions["boxes"].tolist(),
-                            "class_names": regions["class_names"],
-                        }))
-                        if keep_reading_order
-                        else None
-                    )
-                    n_words, text, page_json = build_page_record(
-                        rel_boxes,
-                        scores,
-                        values[start : start + n],
-                        confs[start : start + n],
-                        list(zip(orients[start : start + n], oconfs[start : start + n])),
-                        dims,
-                        page_idx,
-                        raw_tables,
-                        layout_regions,
-                        {"value": int(orient), "confidence": float(orient_conf)},
-                        resolve_lines=resolve_lines,
-                        resolve_blocks=resolve_blocks,
-                        paragraph_break=paragraph_break,
-                        keep_reading_order=keep_reading_order,
-                        text_direction=text_direction,
-                        include_furniture=include_furniture,
-                    )
-                    if emit == "pages":
-                        rows.append((conv_id, turn_idx, page_idx, n_words, text, page_json))
-                        continue
-                    page_texts.append(text)
-                    page_jsons.append(page_json)
-                    n_words_total += n_words
-                if emit != "pages":
-                    rows.append((
-                        conv_id, turn_idx, PAGE_BREAK.join(page_texts),
-                        len(recs), n_words_total, page_jsons,
-                    ))
-            yield pd.DataFrame(rows, columns=_PAGE_COLS if emit == "pages" else _COLS)
+            for turns, crops in crop_chunks(pdf, process_page):
+                # phase B — recognition over every crop of the chunk in one
+                # fixed-size batched forward (same batching as the staged stage)
+                values, confs, orients, oconfs = recognize_crop_arrays(
+                    crops, detect_crop_orientation, reco_arch, reco_vocab
+                )
+                # phase C — per-page build + per-turn assembly
+                rows = []
+                for conv_id, turn_idx, recs in turns:
+                    page_texts, page_jsons = [], []
+                    n_words_total = 0
+                    for (page_idx, dims, orient, orient_conf, regions, tables,
+                         rel_boxes, scores, start, n) in recs:  # fmt: skip
+                        # identical wire format to the staged aux JSON sideband
+                        raw_tables = json.loads(json.dumps(tables)) if tables else []
+                        layout_regions = (
+                            json.loads(json.dumps({
+                                "boxes": regions["boxes"].tolist(),
+                                "class_names": regions["class_names"],
+                            }))
+                            if keep_reading_order
+                            else None
+                        )
+                        n_words, text, page_json = build_page_record(
+                            rel_boxes,
+                            scores,
+                            values[start : start + n],
+                            confs[start : start + n],
+                            list(zip(orients[start : start + n], oconfs[start : start + n])),
+                            dims,
+                            page_idx,
+                            raw_tables,
+                            layout_regions,
+                            {"value": int(orient), "confidence": float(orient_conf)},
+                            resolve_lines=resolve_lines,
+                            resolve_blocks=resolve_blocks,
+                            paragraph_break=paragraph_break,
+                            keep_reading_order=keep_reading_order,
+                            text_direction=text_direction,
+                            include_furniture=include_furniture,
+                        )
+                        if emit == "pages":
+                            rows.append((conv_id, turn_idx, page_idx, n_words, text, page_json))
+                            continue
+                        page_texts.append(text)
+                        page_jsons.append(page_json)
+                        n_words_total += n_words
+                    if emit != "pages":
+                        rows.append((
+                            conv_id, turn_idx, PAGE_BREAK.join(page_texts),
+                            len(recs), n_words_total, page_jsons,
+                        ))
+                yield pd.DataFrame(rows, columns=_PAGE_COLS if emit == "pages" else _COLS)
 
     return fn
 
@@ -227,17 +279,6 @@ def extract_documents(
     recognition (e.g. filtering or rewriting boxes). Word sentinel rows
     (word_idx < 0) must be passed through.
     """
-    if crop_partitions is None:
-        sc = transcripts.sparkSession.sparkContext
-        # fused path: the de-skew repartition is the ONLY balancing point,
-        # so partition turns finely (8 tasks per core, scale-adaptive via
-        # defaultParallelism) — per-turn cost is heavy-tailed (multi-page
-        # PDFs, table pages) and a short task tail also rides out this
-        # VM's roaming per-core stalls. Measured q2 sf0.1/local[32]:
-        # 16-65 s at 2x cores vs 5.4-6.0 s at 8-10x. The staged path keeps
-        # the historical 2x (its crop shuffle re-balances downstream).
-        crop_partitions = sc.defaultParallelism * (2 if loc_hooks else 8)
-
     if not loc_hooks:
         # fused single-stage path (the default): one de-skew hash
         # repartition on (conv_id, turn_idx), then the whole
@@ -245,13 +286,7 @@ def extract_documents(
         # mapInPandas — no crop/word/page exchanges, no intermediate page
         # or crop codec round-trips. `loc_hooks` needs the staged crops
         # DataFrame, so hooked calls take the staged path below.
-        from ..fixtures.payloads import PAYLOAD_MARK
-
-        src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-            "conv_id", "turn_idx", "text"
-        )
-        src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-        docs = src.mapInPandas(
+        docs = fused_source(transcripts, crop_partitions).mapInPandas(
             _make_fused_extractor(
                 resolve_lines,
                 resolve_blocks,
@@ -276,6 +311,10 @@ def extract_documents(
             docs = keys.join(docs, on=["conv_id", "turn_idx"], how="left")
         return docs
 
+    if crop_partitions is None:
+        # staged path: its crop shuffle re-balances recognition, at the
+        # historical 2 tasks per core
+        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 2
     pages = decode_pages(transcripts)
     crops = detect_and_crop(
         pages,
@@ -330,33 +369,9 @@ def extract_pages(
     ``(conv_id, turn_idx, page_idx, n_words, page_text, page_json)`` —
     the shared input of the export surface, computed in one Arrow stage
     instead of the staged decode/detect/recognize/groupBy chain."""
-    sc = transcripts.sparkSession.sparkContext
-    if crop_partitions is None:
-        crop_partitions = sc.defaultParallelism * 8
-    from ..fixtures.payloads import PAYLOAD_MARK
-
-    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-        "conv_id", "turn_idx", "text"
-    )
-    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-    return src.mapInPandas(
+    return fused_source(transcripts, crop_partitions).mapInPandas(
         _make_fused_extractor(
-            resolve_lines,
-            resolve_blocks,
-            paragraph_break,
-            detect_crop_orientation,
-            False,
-            None,
-            False,
-            "ctc",
-            "french",
-            "db_like",
-            None,
-            True,
-            None,
-            True,
-            True,
-            emit="pages",
+            resolve_lines, resolve_blocks, paragraph_break, detect_crop_orientation, emit="pages"
         ),
         schema=PAGE_ROW_SCHEMA,
     )

@@ -141,8 +141,8 @@ def test_wav_pcm_roundtrip_and_features():
 
 
 def test_wav_malformed_fmt_rejects_loudly():
-    """ch == 0 or an empty data chunk must raise the codec's loud
-    ValueError, not a ZeroDivisionError / NaN features downstream."""
+    """ch == 0 must raise the codec's loud ValueError, not a
+    ZeroDivisionError downstream."""
     import struct
 
     import numpy as np
@@ -155,8 +155,29 @@ def test_wav_malformed_fmt_rejects_loudly():
     zero_ch = blob[: fmt_at + 2] + struct.pack("<H", 0) + blob[fmt_at + 4 :]
     with pytest.raises(ValueError, match="NumChannels"):
         decode_wav(zero_ch)
-    i = blob.index(b"data")
-    empty = blob[:i] + b"data" + struct.pack("<I", 0)
-    empty = empty[:4] + struct.pack("<I", len(empty) - 8) + empty[8:]
-    with pytest.raises(ValueError, match="empty WAVE data"):
-        decode_wav(empty)
+
+
+def test_wav_zero_samples_roundtrip():
+    """A zero-sample PCM WAVE is legal: it decodes to an empty
+    (0, channels) array, 16- and 8-bit alike, and its clip features are
+    finite (silence), not NaN."""
+    import struct
+    import warnings
+
+    import numpy as np
+
+    from doctr_spark.kernels.wav import audio_features, decode_wav, encode_wav
+
+    for empty in (np.zeros(0, np.int16), np.zeros((0, 2), np.int16)):
+        out, rate = decode_wav(encode_wav(empty, rate=8000))
+        assert rate == 8000 and out.dtype == np.int16
+        assert out.shape == (0, 1 if empty.ndim == 1 else 2)
+    blob = encode_wav(np.zeros(0, np.int16))
+    bits_at = blob.index(b"fmt ") + 8 + 14
+    out, _ = decode_wav(blob[:bits_at] + struct.pack("<H", 8) + blob[bits_at + 2 :])
+    assert out.shape == (0, 1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        f = audio_features(out, 16000)
+    assert f["duration_sec"] == 0.0 and f["peak"] == 0.0 and f["active_frame_ratio"] == 0.0
+    assert np.isfinite(f["rms_db"])

@@ -34,3 +34,24 @@ def test_read_transcripts_table_branch(spark):
         assert n == t.count() > 0
     finally:
         spark.catalog.dropTempView("transcripts_seam")
+
+
+def test_scan_parallel_non_numeric_shuffle_partitions(spark, monkeypatch):
+    """Databricks Runtime's ``spark.sql.shuffle.partitions=auto`` (which
+    open-source Spark refuses to set, hence the stubbed conf) must not
+    crash the keyed small-scan guard: it falls back to
+    ``defaultParallelism`` partitions and keeps every row."""
+    from doctr_spark.io.sources import scan_parallel
+
+    df = spark.range(0, 100, 1, 1).withColumn("k", F.col("id") % 7)
+    conf = df.sparkSession.conf
+    real_get = conf.get
+
+    def get(key, *default):
+        return "auto" if key == "spark.sql.shuffle.partitions" else real_get(key, *default)
+
+    monkeypatch.setattr(conf, "get", get)
+    out = scan_parallel(df, "k")
+    monkeypatch.undo()
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(out.collect()) == sorted(df.collect())
