@@ -1,13 +1,15 @@
-"""Run-based 8-connected component labeling, pure numpy + union-find.
+"""Run-based 8-connected component labeling, pure numpy, array-at-a-time.
 
 This is the engine's replacement for `cv2.findContours` in the detection
 postprocess (reference
 `doctr/models/detection/differentiable_binarization/base.py:95-140` finds
 contours of the binarized probability map and scores each one). We label
-components over horizontal runs: runs are extracted with one vectorized pass,
-then runs in adjacent rows are unioned when they overlap or touch
-diagonally. Cost is O(runs) with tiny constants — ink on synthetic pages is
-sparse, so this is far cheaper than pixel-level labeling.
+components over horizontal runs: one `np.diff` + one `flatnonzero` over the
+padded mask yields every run, runs in adjacent rows that overlap or touch
+diagonally become edges, and hook-and-shortcut passes over that edge list
+label each component with its smallest run index. Cost is O(runs) per pass
+with tiny constants — ink on synthetic pages is sparse, so this is far
+cheaper than pixel-level labeling.
 """
 
 from __future__ import annotations
@@ -16,25 +18,39 @@ import numpy as np
 
 
 def _min_label_components(n: int, pi: np.ndarray, pj: np.ndarray) -> np.ndarray:
-    """Connected components over edge list (pi, pj): iterative min-label
-    propagation with pointer jumping — fully vectorized, converges in
-    O(log diameter) passes."""
+    """Connected components over edge list (pi, pj); returns, per node, the
+    smallest node index of its component.
+
+    Hook-and-shortcut: every pass hooks each root onto the smallest label
+    among its neighbours (one `np.minimum.at` over the symmetric edge list),
+    then pointer-jumps until every node points at a root. A label only ever
+    moves to a smaller index of the same component, so the trees stay
+    acyclic and the fixpoint is the component minimum. Edges whose ends
+    already share a label stay merged and are dropped from later passes."""
     labels = np.arange(n, dtype=np.int64)
+    src = np.concatenate((pi, pj))
+    dst = np.concatenate((pj, pi))
     while True:
-        nxt = labels.copy()
-        np.minimum.at(nxt, pi, labels[pj])
-        np.minimum.at(nxt, pj, labels[pi])
-        nxt = nxt[nxt]  # pointer jump
-        if np.array_equal(nxt, labels):
+        ls, ld = labels[src], labels[dst]
+        live = ls != ld
+        if not live.any():
             return labels
-        labels = nxt
+        src, dst, ls, ld = src[live], dst[live], ls[live], ld[live]
+        down = ld < ls  # each undirected edge appears once in each direction
+        np.minimum.at(labels, ls[down], ld[down])
+        while True:
+            jumped = labels[labels]
+            if np.array_equal(jumped, labels):
+                break
+            labels = jumped
 
 
 def label_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Extract horizontal runs of True pixels.
 
-    Returns (rows, starts, ends, labels) where ends are exclusive and labels
-    are per-component representative ids after 8-connectivity unioning.
+    Returns (rows, starts, ends, labels) where ends are exclusive, runs are
+    in row-major order, and labels give each run the smallest run index of
+    its 8-connected component.
 
     Adjacency is computed without any per-row loop: runs are globally sorted
     row-major, so shifting coordinates by row*(w+2) turns "overlapping or
@@ -44,14 +60,11 @@ def label_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np
     h, w = mask.shape
     padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = mask
-    diff = np.diff(padded.view(np.int8), axis=1)
-    # flatnonzero + divmod instead of two argwhere passes: same row-major
-    # coordinates, one boolean scan per sign and no (n, 2) index arrays
-    flat = diff.reshape(-1)
-    start_flat = np.flatnonzero(flat == 1)  # row-major order
-    end_flat = np.flatnonzero(flat == -1)
-    rows, starts = np.divmod(start_flat, w + 1)
-    ends = end_flat - rows * (w + 1)  # exclusive
+    # every row starts and ends False, so its value changes alternate
+    # start, end — one scan yields both, already in row-major order
+    edges = np.flatnonzero(np.diff(padded, axis=1))
+    rows, starts = np.divmod(edges[0::2], w + 1)
+    ends = edges[1::2] - rows * (w + 1)  # exclusive
 
     n = rows.shape[0]
     if n == 0:
@@ -78,25 +91,6 @@ def label_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np
     return rows, starts, ends, labels
 
 
-def _run_sums(values: np.ndarray, rows: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
-    """Sum ``values`` over each run [start, end) — one reduceat pass over the
-    flattened image (cheaper in memory traffic than a full-page cumsum)."""
-    h, w = values.shape
-    flat = values.reshape(-1)
-    if flat.dtype.kind in "ui":  # reduceat accumulates in-dtype: avoid uint8 overflow
-        flat = flat.astype(np.int32)
-    lo = rows * w + starts
-    hi = rows * w + ends
-    idx = np.empty(lo.shape[0] * 2, dtype=np.int64)
-    idx[0::2] = lo
-    idx[1::2] = hi
-    trailing_end = idx[-1] == flat.shape[0]
-    if trailing_end:
-        idx = idx[:-1]
-    sums = np.add.reduceat(flat, idx)
-    return sums[0::2].astype(np.float64)
-
-
 def component_boxes(prob: np.ndarray, bin_thresh: float) -> tuple[np.ndarray, np.ndarray]:
     """Binarize a probability map and return per-component (boxes, scores).
 
@@ -109,29 +103,32 @@ def component_boxes(prob: np.ndarray, bin_thresh: float) -> tuple[np.ndarray, np
     """
     mask = prob >= bin_thresh
     rows, starts, ends, labels = label_runs(mask)
-    if rows.shape[0] == 0:
+    n = rows.shape[0]
+    if n == 0:
         return np.empty((0, 4), dtype=np.int64), np.empty(0, dtype=np.float64)
 
-    run_sum = _run_sums(prob, rows, starts, ends)
-    run_px = (ends - starts).astype(np.int64)
+    # prob[mask] is every ink pixel in row-major order, i.e. run after run;
+    # integer pages sum exactly in int64
+    run_px = ends - starts
+    run_off = np.concatenate(([0], np.cumsum(run_px[:-1])))
+    ink = prob[mask]
+    run_sum = np.add.reduceat(ink, run_off, dtype=np.int64 if ink.dtype.kind in "uib" else None)
 
-    roots, inv = np.unique(labels, return_inverse=True)
-    k = roots.shape[0]
-    xmin = np.full(k, np.iinfo(np.int64).max)
-    xmax = np.zeros(k, dtype=np.int64)
-    ymin = np.full(k, np.iinfo(np.int64).max)
-    ymax = np.zeros(k, dtype=np.int64)
-    np.minimum.at(xmin, inv, starts)
-    np.maximum.at(xmax, inv, ends)
-    np.minimum.at(ymin, inv, rows)
-    np.maximum.at(ymax, inv, rows + 1)
-    psum = np.zeros(k, dtype=np.float64)
-    pcnt = np.zeros(k, dtype=np.int64)
-    np.add.at(psum, inv, run_sum)
-    np.add.at(pcnt, inv, run_px)
+    # labels are the smallest run index of each component, so the roots are
+    # the runs labelled with themselves, in ascending component order; a
+    # root is its component's first run in row-major order
+    root = labels == np.arange(n)
+    comp = (np.cumsum(root) - 1)[labels]
+    grouped = np.argsort(comp, kind="stable")  # row-major within a component
+    counts = np.bincount(comp)
+    first = np.concatenate(([0], np.cumsum(counts[:-1])))
+    xmin = np.minimum.reduceat(starts[grouped], first)
+    xmax = np.maximum.reduceat(ends[grouped], first)
+    ymin = rows[root]
+    ymax = rows[grouped][first + counts - 1] + 1
+    scores = np.bincount(comp, weights=run_sum) / np.bincount(comp, weights=run_px)
 
     boxes = np.stack([xmin, ymin, xmax, ymax], axis=1)
-    scores = psum / pcnt
     # deterministic output order: top-to-bottom, left-to-right
     order = np.lexsort((boxes[:, 0], boxes[:, 1]))
     return boxes[order], scores[order]

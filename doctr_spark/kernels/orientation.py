@@ -42,20 +42,8 @@ def _validity(crop: np.ndarray) -> float:
 def estimate_crop_orientation(crop: np.ndarray) -> tuple[int, float]:
     """Return (angle, confidence); angle is how far the crop is rotated
     from upright (counter-clockwise), i.e. rot90(crop, angle//90 * -1 ...)
-    restores it — use `rectify_crop` to apply."""
-    from ..config import GLYPH_H, GLYPH_W
-    from .glyphs import _WEAK_INK
-
-    h, w = crop.shape[:2]
-    if h == GLYPH_H:
-        # upright fast path for native-height crops (the overwhelmingly
-        # common case): every glyph cell's marker column complete is
-        # EXACTLY the k=0 `_validity == 1.0` short-circuit below
-        # (normalize_crop_height is the identity at GLYPH_H), checked on a
-        # strided column view without the full reshape/rot90 machinery
-        n = w // GLYPH_W
-        if n and (crop[:, 0 : n * GLYPH_W : GLYPH_W] >= _WEAK_INK).all():
-            return 0, 1.0
+    restores it — use `rectify_crop` to apply. Batches should clear their
+    upright crops with `upright_crops` first."""
     best_angle, best_score = 0, -1.0
     for k, angle in enumerate(ORIENTATIONS):
         score = _validity(np.rot90(crop, -k) if k else crop)
@@ -64,6 +52,35 @@ def estimate_crop_orientation(crop: np.ndarray) -> tuple[int, float]:
         if score == 1.0:  # fully readable: no other orientation can beat it
             break
     return best_angle, max(best_score, 0.0)
+
+
+def upright_crops(crops: list) -> np.ndarray:
+    """Batched upright check: True exactly where a crop is native height
+    and every glyph cell's marker column is complete. That is the
+    `_validity == 1.0` short-circuit of `estimate_crop_orientation` at
+    k=0 (`normalize_crop_height` is the identity at GLYPH_H), so a True
+    crop's orientation is (0, 1.0) without scoring any rotation. The
+    native-height crops are concatenated side by side, every cell's marker
+    column is gathered at once, and the per-cell verdicts are and-reduced
+    per crop — the classifier sees the chunk as one batch, like the
+    reference `OrientationPredictor`."""
+    from .glyphs import _WEAK_INK
+
+    out = np.zeros(len(crops), dtype=bool)
+    idx = [i for i, c in enumerate(crops) if c.shape[0] == GLYPH_H and c.shape[1] >= GLYPH_W]
+    if not idx:
+        return out
+    native = [crops[i] for i in idx]
+    widths = np.array([c.shape[1] for c in native])
+    cells = widths // GLYPH_W
+    # column of cell j of crop i in the concatenation: offset_i + j*GLYPH_W
+    first_cell = np.cumsum(cells) - cells
+    offsets = np.cumsum(widths) - widths
+    cell_crop = np.repeat(np.arange(len(native)), cells)
+    cols = offsets[cell_crop] + (np.arange(cells.sum()) - first_cell[cell_crop]) * GLYPH_W
+    marked = (np.concatenate(native, axis=1)[:, cols] >= _WEAK_INK).all(axis=0)
+    out[idx] = np.logical_and.reduceat(marked, first_cell)
+    return out
 
 
 def rectify_crop(crop: np.ndarray, angle: int) -> np.ndarray:

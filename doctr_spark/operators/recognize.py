@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
@@ -42,24 +43,22 @@ def recognize_crop_arrays(
     crop_orient_confs). The per-crop semantics (orientation classify +
     rectify, then the fixed-size batched forward) are shared by the staged
     `recognize` stage and the fused single-stage pipeline
-    (`operators.pipeline`) — bit-identical per crop in both."""
-    from ..kernels.orientation import estimate_crop_orientation, rectify_crop
+    (`operators.pipeline`) — bit-identical per crop in both. One batched
+    upright check clears the common case; only the crops it rejects are
+    classified (and rectified) one by one."""
+    from ..kernels.orientation import estimate_crop_orientation, rectify_crop, upright_crops
     from ..kernels.vocab import VOCABS
 
     vocab = VOCABS[vocab_name]
-    rect: list = []
-    orients: list[int] = []
-    oconfs: list[float] = []
-    for crop in crops:
-        if detect_orientation:
-            angle, oconf = estimate_crop_orientation(crop)
+    rect = list(crops)
+    orients = [0] * len(rect)
+    oconfs = [1.0] * len(rect)
+    if detect_orientation:
+        for i in np.flatnonzero(~upright_crops(rect)).tolist():
+            angle, oconfs[i] = estimate_crop_orientation(rect[i])
             if angle:
-                crop = rectify_crop(crop, angle)
-        else:
-            angle, oconf = 0, 1.0
-        orients.append(angle)
-        oconfs.append(oconf)
-        rect.append(crop)
+                rect[i] = rectify_crop(rect[i], angle)
+            orients[i] = angle
     preds = recognize_crops_batched(rect, vocab=vocab, arch=arch)
     return [v for v, _ in preds], [c for _, c in preds], orients, oconfs
 

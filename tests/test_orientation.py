@@ -1,8 +1,8 @@
 import numpy as np
 
-from doctr_spark.config import GLYPH_H
+from doctr_spark.config import GLYPH_H, GLYPH_W
 from doctr_spark.kernels.glyphs import draw_word, word_width
-from doctr_spark.kernels.orientation import estimate_crop_orientation, rectify_crop
+from doctr_spark.kernels.orientation import estimate_crop_orientation, rectify_crop, upright_crops
 from doctr_spark.kernels.recognition import recognize_crop
 
 
@@ -39,6 +39,47 @@ def test_square_word_no_false_positive():
     crop = np.rot90(_crop("abcd"), 2)
     angle, conf = estimate_crop_orientation(crop)
     assert angle == 180
+
+
+def _mixed_crops():
+    base = _crop("spark42")
+    return [
+        _crop("hello"),
+        np.rot90(base, 1),
+        np.rot90(base, 2),
+        np.rot90(base, 3),
+        np.kron(_crop("scaled"), np.ones((2, 2), dtype=np.uint8)),  # 2x scan
+        _crop("a")[:, : GLYPH_W - 1],  # narrower than one glyph cell
+        np.zeros((GLYPH_H, 3 * GLYPH_W), dtype=np.uint8),  # native height, no ink
+        _crop("abcd")[:, 1:],  # marker columns shifted off the cell grid
+        np.rot90(_crop("abcd"), 2),  # square: the 90/270 candidates fit too
+        base,
+    ]
+
+
+def test_upright_crops_matches_per_crop_scorer():
+    crops = _mixed_crops()
+    got = upright_crops(crops)
+    # at native height the per-crop scorer returns (0, 1.0) exactly when
+    # the batched check passes; any other height must be scored per crop
+    want = [c.shape[0] == GLYPH_H and estimate_crop_orientation(c) == (0, 1.0) for c in crops]
+    assert got.tolist() == want
+    assert got.tolist() == [True, False, False, False, False, False, False, False, False, True]
+    assert estimate_crop_orientation(crops[4]) == (0, 1.0)  # upright, via the scorer
+    assert upright_crops([]).shape == (0,)
+
+
+def test_recognize_crop_arrays_matches_per_crop_reference():
+    from doctr_spark.operators.recognize import recognize_crop_arrays
+
+    crops = _mixed_crops()
+    ref = []
+    for c in crops:
+        angle, oconf = estimate_crop_orientation(c)
+        ref.append((*recognize_crop(rectify_crop(c, angle)), angle, oconf))
+    got = recognize_crop_arrays(crops, detect_orientation=True)
+    assert list(zip(*got)) == ref
+    assert recognize_crop_arrays([], detect_orientation=True) == ([], [], [], [])
 
 
 def test_estimate_page_orientation_kernel():
